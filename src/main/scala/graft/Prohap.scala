@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{HaploProteins, Haplotypes, IntervalJoin}
 import graft.queries.GenomicPipeline
@@ -27,10 +27,18 @@ import graft.sources.{Fasta, Gtf, Vcf}
   */
 private[graft] object ProHapCli {
 
+  /** `-flag value` pairs. Every flag takes a value, so an odd token count
+    * or a flag-position token without a leading `-` is rejected, naming
+    * the token: silently dropping it would run with a default instead
+    * (`af 0.01` -> AF 0) or shift every later pair. Values may start with
+    * `-` (`-min_hap_freq -1`).
+    */
   def parseArgs(args: Array[String]): Map[String, String] =
-    args.grouped(2).collect {
-      case Array(flag, value) if flag.startsWith("-") =>
-        flag.stripPrefix("-") -> value
+    args.grouped(2).map { case pair @ Array(flag, _*) =>
+      require(flag.startsWith("-"),
+        s"expected a -flag, got '$flag' (arguments are -flag value pairs)")
+      require(pair.length == 2, s"flag '$flag' has no value")
+      flag.stripPrefix("-") -> pair(1)
     }.toMap
 
   /** `-af_field MAF` (vcf_filter_fix.py:11): which INFO key(s) carry the
@@ -166,15 +174,21 @@ private[graft] object ProHapCli {
         "pos", "ref", "alt", "allele_af", "gt")
   }
 
+  /** Content-derived haplotype id: `idPrefix` + the first 12 hex digits
+    * of md5(transcript|vcf_ids) — the same key in the metadata TSV and
+    * both FASTA headers.
+    */
+  def haplotypeId(idPrefix: String): Column =
+    concat(lit(idPrefix), substring(
+      md5(concat(col("transcript"), lit("|"), col("vcf_ids"))), 1, 12))
+
   /** Reference metadata column layout (process_haplotypes.py:9-32). */
   def metadataFrame(db: DataFrame, idPrefix: String): DataFrame =
     db.select(
       col("transcript").as("TranscriptID"),
       col("chromosome"),
       col("biotype").as("transcript_biotype"),
-      concat(lit(idPrefix), substring(
-        md5(concat(col("transcript"), lit("|"), col("vcf_ids"))), 1, 12))
-        .as("HaplotypeID"),
+      haplotypeId(idPrefix).as("HaplotypeID"),
       col("vcf_ids").as("VCF_IDs"),
       col("dna_changes").as("DNA_changes"),
       col("allele_freqs").as("allele_frequencies"),
@@ -198,20 +212,10 @@ private[graft] object ProHapCli {
     * reading_frame:r1;r2` (prohap.py:174-179, content-derived accession).
     */
   def fastaEntries(db: DataFrame, tag: String, accPrefix: String,
-                   idPrefix: String): DataFrame = {
-    val hapId = concat(lit(idPrefix), substring(
-      md5(concat(col("transcript"), lit("|"), col("vcf_ids"))), 1, 12))
-    val entries = when(col("alt_frame_sequences") === "-",
-      array(struct(col("protein_sequence").as("seq"),
-        col("reading_frame").cast("string").as("rf"))))
-      .otherwise(array(
-        struct(col("protein_sequence").as("seq"), lit("0").as("rf")),
-        struct(split(col("alt_frame_sequences"), ";").getItem(0).as("seq"),
-          lit("1").as("rf")),
-        struct(split(col("alt_frame_sequences"), ";").getItem(1).as("seq"),
-          lit("2").as("rf"))))
-    db.select(hapId.as("hap"), col("protein_prefix_length").as("ps"),
-        explode(entries).as("e"))
+                   idPrefix: String): DataFrame =
+    db.select(haplotypeId(idPrefix).as("hap"),
+        col("protein_prefix_length").as("ps"),
+        explode(HaploProteins.frameEntries).as("e"))
       .groupBy(col("e.seq").as("sequence"))
       .agg(
         array_join(sort_array(collect_list(col("hap"))), ";").as("haps"),
@@ -225,16 +229,14 @@ private[graft] object ProHapCli {
           lit(" start:"), col("start"),
           lit(" reading_frame:"), col("rfs")).as("description"),
         col("sequence"))
-  }
 
   /** cDNA FASTA entries (prohap.py:184-193 header layout inside the
     * tag|accession|description grammar [[Fasta.write]] emits).
     */
   def cdnaEntries(db: DataFrame, tag: String, idPrefix: String)
-  : DataFrame = {
-    val keyed = db.withColumn("_hap", concat(lit(idPrefix), substring(
-      md5(concat(col("transcript"), lit("|"), col("vcf_ids"))), 1, 12)))
-    keyed.groupBy(col("cdna_sequence"))
+  : DataFrame =
+    db.withColumn("_hap", haplotypeId(idPrefix))
+      .groupBy(col("cdna_sequence"))
       .agg(array_join(sort_array(collect_list(col("_hap"))), ";")
           .as("haps"),
         min(col("cdna_start")).as("start"))
@@ -244,6 +246,25 @@ private[graft] object ProHapCli {
         concat(col("haps"), lit(" start:"), col("start"))
           .as("description"),
         col("cdna_sequence").as("sequence"))
+
+  /** The transcript table [[HaploProteins.proteinDatabase]] joins:
+    * annotation + `-cdna` sequences, restricted to the interval table's
+    * transcripts. `-require_start 1` (the reference default,
+    * prohap.py:122-127, provar.py:33-34) drops transcripts without a
+    * start_codon annotation; 0 keeps them (they translate in all three
+    * frames, reading_frame = -1).
+    */
+  def transcriptInfo(spark: SparkSession, gtf: DataFrame,
+                     transcripts: DataFrame,
+                     opts: Map[String, String]): DataFrame = {
+    val cdna = Fasta.read(spark, opts("cdna"))
+      .select(col("accession").as("transcript_id"), col("sequence"))
+    val tinfo = GenomicPipeline.transcriptInfoFrom(gtf, cdna)
+      .join(broadcast(transcripts.select("transcript")), Seq("transcript"),
+        "left_semi")
+    if (opts.getOrElse("require_start", "1") == "1")
+      tinfo.where(col("start_codon_start").isNotNull)
+    else tinfo
   }
 
   def write(df: DataFrame, path: String, opts: Map[String, String],
@@ -287,18 +308,7 @@ object Prohap {
       opts.getOrElse("x_par1_to", "2781479").toLong,
       opts.getOrElse("x_par2_from", "155701383").toLong,
       opts.getOrElse("bin_size", "100000").toLong)
-    val cdna = Fasta.read(spark, opts("cdna"))
-      .select(col("accession").as("transcript_id"), col("sequence"))
-    // -require_start 1 (reference default, prohap.py:122-127): transcripts
-    // without a start_codon annotation are dropped entirely; 0 keeps them
-    // (they translate in all three frames, reading_frame = -1)
-    val tinfo0 = GenomicPipeline.transcriptInfoFrom(gtf, cdna)
-      .join(broadcast(transcripts.select("transcript")), Seq("transcript"),
-        "left_semi")
-    val tinfo =
-      if (opts.getOrElse("require_start", "1") == "1")
-        tinfo0.where(col("start_codon_start").isNotNull)
-      else tinfo0
+    val tinfo = transcriptInfo(spark, gtf, transcripts, opts)
     val metaOpt =
       if (Seq("population", "superpopulation").forall(
         meta.columns.contains(_))) Some(meta)
@@ -349,34 +359,13 @@ object Provar {
       ProHapCli.readVcfInput(spark, opts), minAf)
     val gtf = Gtf.read(spark, opts("db"))
     val transcripts = transcriptIntervals(spark, gtf, opts)
-    // one row per allele line: multi-allelic rows share a VCF id, so the
-    // per-allele id is made unique (provar emits one row per allele)
     val perVariant = IntervalJoin.pointsInIntervals(
-      norm.select(col("chrom"), col("pos"), col("id"), col("ref"),
-        col("alt"), col("allele_af")),
+      norm.select(col("chrom"), col("pos"), col("id").as("varId"),
+        col("ref"), col("alt"), col("allele_af")),
       transcripts, Seq("chrom"),
       opts.getOrElse("bin_size", "100000").toLong)
-      .select("transcript", "id", "pos", "ref", "alt", "allele_af")
-      .distinct()
-      .withColumn("varId", concat(col("id"), lit(":"), col("alt")))
-      .withColumn("changes", array(struct(col("pos"), col("varId"),
-        col("ref"), col("alt"), col("allele_af").as("af"))))
-      .withColumn("signature", col("varId"))
-      .withColumn("hap_count", lit(1L))
-      .withColumn("frequency", lit(0.0))
-      .withColumn("samples", lit(""))
-      .drop("id")
-    val cdna = Fasta.read(spark, opts("cdna"))
-      .select(col("accession").as("transcript_id"), col("sequence"))
-    // same -require_start contract as Prohap (provar.py:33-34)
-    val tinfo0 = GenomicPipeline.transcriptInfoFrom(gtf, cdna)
-      .join(broadcast(transcripts.select("transcript")), Seq("transcript"),
-        "left_semi")
-    val tinfo =
-      if (opts.getOrElse("require_start", "1") == "1")
-        tinfo0.where(col("start_codon_start").isNotNull)
-      else tinfo0
-    HaploProteins.proteinDatabase(perVariant.join(tinfo, Seq("transcript")),
+    HaploProteins.proteinDatabase(GenomicPipeline.variantInputFrom(
+        perVariant, transcriptInfo(spark, gtf, transcripts, opts)),
       forceRf = opts.getOrElse("force_rf", "1") == "1",
       ignoreUtr = false, skipStartLoss = false, requireNonSyn = false,
       keepCdna = opts.contains("output_cdna_fasta"))

@@ -7,19 +7,21 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled kernels for the ProHap protein-pipeline per-row folds.
   *
-  * [[graft.operators.HaploProteins.proteinDatabase]] originally expressed
-  * its per-variant / per-haplotype sequential state as Catalyst
-  * higher-order functions (`aggregate` / `transform` / `zip_with`).
-  * Those evaluate INTERPRETED — per array element Spark re-walks a large
-  * `when`-chain expression tree and rebinds lambda variables, which made
-  * the protein family (px/px10/pv1, ~12.7 s combined at sf0.1) the
-  * largest remaining CPU sink of the r17 bench (guide §4.2/§4.5: do the
+  * These kernels are the only implementation of the per-variant /
+  * per-haplotype sequential state of
+  * [[graft.operators.HaploProteins.proteinDatabase]]. They replaced
+  * Catalyst higher-order functions (`aggregate` / `transform` /
+  * `zip_with`), which evaluate INTERPRETED — per array element Spark
+  * re-walks a large `when`-chain expression tree and rebinds lambda
+  * variables, which made the protein family (px/px10/pv1, ~12.7 s
+  * combined at sf0.1) the largest CPU sink of the operator bench (do the
   * heavy lifting in compiled code, initialise state once).
   *
-  * Each kernel here is a LINE-FOR-LINE transcription of the expression
-  * tree it replaces (the legacy expressions remain in HaploProteins
-  * behind `spark.graft.protein.kernels=false`, and
-  * HaploProteinsKernelSpec pins row identity between the two paths).
+  * Each kernel here is a LINE-FOR-LINE transcription of one of those
+  * expression trees. The trees are kept, as code, in src/test
+  * (`HaploProteinsHofReference`), and HaploProteinsKernelSpec evaluates
+  * each kernel next to its transcription on the rows the pipeline feeds
+  * it; the outputs must match exactly.
   * String semantics reuse the exact Catalyst primitives:
   * `UTF8String.substringSQL` (= `Column.substr`), `UTF8String.concat`
   * (= `concat`), char-count lengths (= `length`), and
@@ -58,7 +60,7 @@ object NativeProteinOps {
     *
     * `exons` is array<struct<start:long,end:long>> sorted by start;
     * returns struct<rna:long, ref:string, alt:string, intersect:int>
-    * (intersect nullable). Field-for-field the legacy aggregate's merge
+    * (intersect nullable). Field-for-field the reference aggregate's merge
     * expression, evaluated with the old accumulator values exactly as
     * Catalyst does (every branch below reads only pre-update state).
     */

@@ -148,6 +148,27 @@ object GenomicPipeline {
     withPop.join(tinfo, Seq("transcript"))
   }
 
+  /** ProVar input (process_variants.py): every distinct allele line as a
+    * one-variant "haplotype" of its transcript, in the row shape
+    * [[HaploProteins.proteinDatabase]] consumes (hap_count 1, frequency
+    * 0, no samples). `variants` columns: transcript, varId (the VCF id),
+    * pos, ref, alt, allele_af. Multi-allelic lines share a VCF id, so the
+    * per-allele id becomes `id:alt` and rows don't merge (the reference
+    * emits one row per allele line).
+    */
+  def variantInputFrom(variants: DataFrame, tinfo: DataFrame): DataFrame =
+    variants
+      .select("transcript", "varId", "pos", "ref", "alt", "allele_af")
+      .distinct()
+      .withColumn("varId", concat(col("varId"), lit(":"), col("alt")))
+      .withColumn("changes", array(struct(col("pos"), col("varId"),
+        col("ref"), col("alt"), col("allele_af").as("af"))))
+      .withColumn("signature", col("varId"))
+      .withColumn("hap_count", lit(1L))
+      .withColumn("frequency", lit(0.0))
+      .withColumn("samples", lit(""))
+      .join(tinfo, Seq("transcript"))
+
   private var dbReady = false
 
   /** Frames persisted by haploInput; drained (unpersisted) once a
@@ -303,22 +324,10 @@ object GenomicPipeline {
       prep(s)
       // ProVar: one row per variant x transcript (no haplotype grouping,
       // UTRs kept, synonymous kept) — process_variants.py semantics
-      val gts = s.read.parquet(s"$fx/gts_long.parquet")
-      val perVariant = gts
-        .select("transcript", "varId", "pos", "ref", "alt", "allele_af")
-        .distinct()
-        // multi-allelic rows share a VCF id: make the per-allele id unique
-        // so rows don't merge (reference emits one row per allele line)
-        .withColumn("varId", concat(col("varId"), lit(":"), col("alt")))
-        .withColumn("changes", array(struct(col("pos"), col("varId"),
-          col("ref"), col("alt"), col("allele_af").as("af"))))
-        .withColumn("signature", col("varId"))
-        .withColumn("hap_count", lit(1L))
-        .withColumn("frequency", lit(0.0))
-        .withColumn("samples", lit(""))
-        .join(transcriptInfo(s), Seq("transcript"))
-      HaploProteins.proteinDatabase(perVariant, ignoreUtr = false,
-        skipStartLoss = false, requireNonSyn = false)
+      HaploProteins.proteinDatabase(
+        variantInputFrom(s.read.parquet(s"$fx/gts_long.parquet"),
+          transcriptInfo(s)),
+        ignoreUtr = false, skipStartLoss = false, requireNonSyn = false)
         .orderBy("transcript", "vcf_ids")
     })
   )

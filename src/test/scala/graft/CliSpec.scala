@@ -44,6 +44,25 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.toSeq.map(String.valueOf).mkString("|")).toSet
   }
 
+  test("parseArgs rejects misaligned tokens, naming them, instead of " +
+    "dropping them") {
+    import ProHapCli.parseArgs
+    // values may start with '-'
+    assert(parseArgs(Array("-af", "0.01", "-min_hap_freq", "-1")) ==
+      Map("af" -> "0.01", "min_hap_freq" -> "-1"))
+    def rejected(args: String*): String =
+      intercept[IllegalArgumentException](parseArgs(args.toArray))
+        .getMessage
+    // a missing dash used to run with AF 0
+    assert(rejected("-i", "x.vcf", "af", "0.01").contains("'af'"))
+    // a trailing value-less flag used to be ignored
+    assert(rejected("-i", "x.vcf", "-single_file")
+      .contains("'-single_file'"))
+    // a value-less flag mid-list used to shift every later pair
+    assert(rejected("-single_file", "-i", "x.vcf", "-af", "0.01")
+      .contains("'x.vcf'"))
+  }
+
   test("Prohap.run from raw files == the h4 protein database") {
     val cli = Prohap.run(spark, fixtureOpts)
     val gate = GenomicPipeline.proteinDb(spark)

@@ -1,21 +1,31 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.classic.GraftColumnBridge.column
+import org.apache.spark.sql.classic.GraftPlanFrames
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.fixtures.GenomicFixtures
 import graft.operators.HaploProteins
+import graft.plans.ProteinExprs._
 import graft.queries.GenomicPipeline
+import graft.{HaploProteinsHofReference => Hof}
 
-/** Row-for-row parity between the compiled protein kernels
-  * (spark.graft.protein.kernels=true, the default) and the legacy
-  * higher-order-function expressions they transcribe. The kernels are
-  * an r18 OPTIMIZATION — identical semantics is the contract, so every
-  * flag combination the declared queries use runs both paths over the
-  * fixture mini-genome, the inline edge-case haplotypes, and a
-  * generated multi-shape corpus, and the outputs must match exactly
-  * (schema and rows).
+/** Per-kernel parity between the compiled protein kernels
+  * ([[graft.plans.ProteinExprs]]) and the higher-order-function
+  * expressions they transcribe ([[HaploProteinsHofReference]]).
+  *
+  * For each input set and flag combination, the spec builds
+  * [[HaploProteins.proteinDatabase]], finds every kernel call in its
+  * analyzed plan, and evaluates the call next to its transcription over
+  * the rows the call's node consumes — the pipeline's own input to that
+  * kernel. The outputs (type and every row) must match exactly. The
+  * input sets are the fixture mini-genome (haplotypes and the pv1
+  * per-variant rows), the inline edge-case haplotypes E1-E10, and a
+  * generated 120-haplotype multi-shape corpus.
   */
 class HaploProteinsKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -34,49 +44,83 @@ class HaploProteinsKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def both(build: => DataFrame): (DataFrame, DataFrame) = {
-    spark.conf.set("spark.graft.protein.kernels", "true")
-    val kernel = build
-    spark.conf.set("spark.graft.protein.kernels", "false")
-    val legacy = build
-    spark.conf.set("spark.graft.protein.kernels", "true")
-    (kernel, legacy)
+  /** The HOF transcription of one kernel call, over the same arguments. */
+  private val reference: PartialFunction[Expression, Column] = {
+    case k: GraftRnaAllele =>
+      Hof.rnaAllele(column(k.exons), column(k.loc), column(k.ref),
+        column(k.alt))
+    case k: GraftAffected =>
+      Hof.affected(column(k.cdna), column(k.loc), column(k.alen),
+        column(k.rf), column(k.pstart))
+    case k: GraftStartState =>
+      Hof.startState(column(k.vars), column(k.sl0), column(k.rf0),
+        column(k.ps0), column(k.hasStart), k.forceRf, k.skipStartLoss)
+    case k: GraftApplyVars =>
+      Hof.applyVars(column(k.vars), column(k.cdna))
+    case k: GraftConseq =>
+      Hof.conseq(column(k.refA), column(k.altA), column(k.dnaType),
+        column(k.isFs), column(k.hasFsBefore))
   }
 
-  private def assertSame(build: => DataFrame, what: String): Unit = {
-    val (kernel, legacy) = both(build)
-    assert(kernel.schema.map(f => (f.name, f.dataType)) ==
-      legacy.schema.map(f => (f.name, f.dataType)),
-      s"$what: schema diverged")
-    val sortCols = kernel.columns.toSeq
-    def rows(df: DataFrame): Seq[Row] =
-      df.orderBy(sortCols.map(col): _*).collect().toSeq
-    val (k, l) = (rows(kernel), rows(legacy))
-    assert(k.length == l.length,
-      s"$what: row count ${k.length} vs ${l.length}")
-    k.zip(l).zipWithIndex.foreach { case ((a, b), i) =>
-      assert(a == b, s"$what: row $i diverged\n kernel: $a\n legacy: $b")
+  /** Every kernel call in `db`'s plan must equal its transcription on the
+    * rows its node consumes; all five kernels must be reached (affected
+    * twice: reference and mutated side).
+    */
+  private def assertKernelsMatch(db: DataFrame, what: String): Unit = {
+    val calls = db.queryExecution.analyzed.collect { case node =>
+      node.expressions.flatMap(_.collect {
+        case k if reference.isDefinedAt(k) => (node, k)
+      })
+    }.flatten
+    val checked = calls.map {
+      case (p: Project, k) =>
+        val out = GraftPlanFrames.frame(spark, p.child)
+          .select(column(k).as("kernel"), reference(k).as("hof"))
+        val name = s"$what: ${k.prettyName}"
+        assert(out.schema("kernel").dataType.catalogString ==
+          out.schema("hof").dataType.catalogString, s"$name: type diverged")
+        val rows = out.collect()
+        assert(rows.nonEmpty, s"$name: no input rows")
+        rows.zipWithIndex.foreach { case (r, i) =>
+          assert(r.get(0) == r.get(1),
+            s"$name: row $i diverged\n kernel: ${r.get(0)}\n hof: ${r.get(1)}")
+        }
+        k.prettyName
+      case (node, k) =>
+        fail(s"$what: ${k.prettyName} outside a projection: ${node.nodeName}")
     }
+    assert(checked.sorted == Seq("graft_affected", "graft_affected",
+      "graft_apply_vars", "graft_conseq", "graft_rna_allele",
+      "graft_start_state"), s"$what: kernel calls found")
   }
+
+  private val flagCombos: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "default" -> (HaploProteins.proteinDatabase(_)),
+    "pv1 flags" -> (HaploProteins.proteinDatabase(_, ignoreUtr = false,
+      skipStartLoss = false, requireNonSyn = false)),
+    "forceRf=false keepCdna=true" -> (HaploProteins.proteinDatabase(_,
+      forceRf = false, keepCdna = true)))
+
+  private def check(input: DataFrame, what: String, flags: String): Unit =
+    assertKernelsMatch(flagCombos.toMap.apply(flags)(input), s"$what, $flags")
+
+  private def everyCombo(input: DataFrame, what: String): Unit =
+    flagCombos.foreach { case (flags, _) => check(input, what, flags) }
 
   test("fixture corpus: default flags match the legacy expressions") {
-    assertSame(
-      HaploProteins.proteinDatabase(GenomicPipeline.haploInput(spark)),
-      "default flags")
+    check(GenomicPipeline.haploInput(spark), "fixture", "default")
   }
 
   test("fixture corpus: pv1 flags (UTRs kept, start-loss kept, " +
     "synonymous kept) match") {
-    assertSame(
-      HaploProteins.proteinDatabase(GenomicPipeline.haploInput(spark),
-        ignoreUtr = false, skipStartLoss = false, requireNonSyn = false),
-      "pv1 flags")
+    check(GenomicPipeline.haploInput(spark), "fixture", "pv1 flags")
+    // the pv1 gate itself: one-variant rows per allele line
+    assertKernelsMatch(SparkEntry.queries("pv1_provar")(spark, ""),
+      "pv1_provar")
   }
 
   test("fixture corpus: forceRf=false and keepCdna=true match") {
-    assertSame(
-      HaploProteins.proteinDatabase(GenomicPipeline.haploInput(spark),
-        forceRf = false, keepCdna = true),
+    check(GenomicPipeline.haploInput(spark), "fixture",
       "forceRf=false keepCdna=true")
     GenomicPipeline.releaseCaches()
   }
@@ -123,6 +167,10 @@ class HaploProteinsKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
       // frameshift BEFORE the start codon (shifts the start location)
       inline(Seq((5L, 70L)), Some(11L), "+",
         "TTTTTT" + cdna, Seq((7L, "e5", "T", "TA")), "E5"),
+      // SNP on the base right before the start codon: shifts nothing and
+      // must not count as a start hit (the hitsStart boundary)
+      inline(Seq((5L, 70L)), Some(11L), "+",
+        "TTTTTT" + cdna, Seq((10L, "eD", "T", "C")), "E10"),
       // no start codon at all: rf = -1, three-frame chaining + deletion
       inline(Seq((11L, 70L)), None, "+", cdna,
         Seq((20L, "e6", "TGC", "T"), (31L, "e7", "C", "G")), "E6"),
@@ -138,15 +186,6 @@ class HaploProteinsKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
       inline(Seq((11L, 70L)), Some(11L), "+", cdna,
         Seq((15L, "eC", "T", "GC")), "E9") // cdna[4..5] = "GC"
     ).reduce(_ unionByName _)
-  }
-
-  test("edge-case haplotypes match under every declared flag combo") {
-    assertSame(HaploProteins.proteinDatabase(edgeCases), "edges default")
-    assertSame(HaploProteins.proteinDatabase(edgeCases,
-      ignoreUtr = false, skipStartLoss = false, requireNonSyn = false),
-      "edges pv1 flags")
-    assertSame(HaploProteins.proteinDatabase(edgeCases,
-      forceRf = false, keepCdna = true), "edges forceRf=false")
   }
 
   // ---- generated corpus: many shapes through the same plan --------------
@@ -201,12 +240,13 @@ class HaploProteinsKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.reduce(_ unionByName _)
   }
 
+  test("edge-case haplotypes match under every declared flag combo") {
+    everyCombo(edgeCases, "edges")
+  }
+
   test("generated corpus (120 haplotypes, mixed shapes) matches") {
     val corpus = generated(120).localCheckpoint()
-    assertSame(HaploProteins.proteinDatabase(corpus), "generated default")
-    assertSame(HaploProteins.proteinDatabase(corpus,
-      ignoreUtr = false, skipStartLoss = false, requireNonSyn = false),
-      "generated pv1 flags")
+    everyCombo(corpus, "generated")
     corpus.unpersist(blocking = false)
   }
 }
